@@ -18,7 +18,14 @@ Design (SURVEY §3.4, §4.3):
   reference's sort-on-insert queue (test/test_api.js:216-267: HIGH
   submitted later overtakes queued LOW), and on Spark it executes as
   TakeOrderedAndProject (per-partition heap + driver merge, no global
-  sort), which is why the same plan is fine with 10^9 pending batches.
+  sort). Each step still scans ``batches`` and the whole log, so its cost
+  grows with the state tables; that curve has not been measured.
+- **Writes go through Arrow.** Every rows → DataFrame conversion is
+  :meth:`IngestionPipeline._frame`: the rows become a ``pyarrow.Table``,
+  which Spark plans as a driver-side ``LocalTableScan``. Built from a list
+  of ``Row`` objects the same frame would be a pickled Python RDD, and a
+  Python worker would start up to unpickle one to three rows per write.
+  Durable appends still run Spark's parquet writer and commit protocol.
 - **Mutual exclusion (A13) is structural**: one drain loop per pipeline
   object; in the Structured Streaming deployment one query = one active
   trigger at a time.
@@ -39,9 +46,11 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..ingestion.core import priority_level
 from ..schemas import (
@@ -134,11 +143,12 @@ class IngestionPipeline:
         durable: bool = True,
     ):
         """``durable=True`` (production): state tables are parquet on disk,
-        surviving restarts. ``durable=False``: state rows live in driver
-        memory and materialize as DataFrames on read — identical query
-        semantics (every rollup/join/top-1 still runs through Spark), no
-        per-operation file-commit overhead; used by the fast test suite
-        (a durable-mode test keeps the parquet path covered)."""
+        surviving restarts; each append is one Spark write job with its
+        commit (≈0.13–0.15 s on 4 vCPUs). ``durable=False``: state rows live
+        in driver memory and materialize as DataFrames on read — identical
+        query semantics (every rollup/join/top-1 still runs through Spark)
+        and no state on disk; used by the fast test suite (durable-mode
+        tests keep the parquet path covered)."""
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DrainConfig()
@@ -165,22 +175,39 @@ class IngestionPipeline:
     def _path(self, name: str) -> str:
         return os.path.join(self.state_dir, name)
 
+    def _frame(self, rows: list, schema: T.StructType) -> DataFrame:
+        """State rows (``Row`` objects) as a DataFrame, through Arrow so
+        that it plans as a ``LocalTableScan`` (see the module docstring).
+
+        Datetimes are moved to UTC first: pyarrow stores an aware datetime's
+        wall-clock reading whatever its offset, where Spark's row conversion
+        stores the instant (and reads a naive value as local time, as
+        ``astimezone`` does)."""
+        table = pa.Table.from_pylist(
+            [
+                {k: v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+                 for k, v in r.asDict().items()}
+                for r in rows
+            ],
+            schema=to_arrow_schema(schema),
+        )
+        return self.spark.createDataFrame(table, schema)
+
     def _read(self, name: str, schema: T.StructType) -> DataFrame:
         if not self.durable:
-            return self.spark.createDataFrame(self._mem.get(name, []), schema)
+            return self._frame(self._mem.get(name, []), schema)
         path = self._path(name)
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except Exception:  # no data yet
-            return self.spark.createDataFrame([], schema)
+        if not os.path.exists(path):  # no data yet; any other failure raises
+            return self._frame([], schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _append(self, name: str, rows: list, schema: T.StructType) -> None:
         if not self.durable:
             self._mem.setdefault(name, []).extend(rows)
             return
-        self.spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(self._path(name))
+        self._frame(rows, schema).coalesce(1).write.mode("append").parquet(
+            self._path(name)
+        )
 
     # -- A2-A5: ingest -------------------------------------------------------
 

@@ -9,7 +9,9 @@ over the library pipeline, using only the stdlib.
 
 Ingest triggers the drain loop fire-and-forget on a worker thread —
 the async boundary the reference creates with an un-awaited
-``processBatches()`` (src/app.js:152). A lock serializes drains (A13).
+``processBatches()`` (src/app.js:152). A lock serializes drains (A13), and
+a pending flag keeps an ingest that arrives while a drain is finishing
+from waiting for the next POST.
 The library API (drain.IngestionPipeline) stays the primary surface; this
 shim exists for black-box route-level parity testing.
 """
@@ -25,16 +27,23 @@ from .drain import IngestionPipeline, InvalidRequest, NotFound
 
 def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServer:
     drain_lock = threading.Lock()
+    work_pending = threading.Event()
 
     def drain_async() -> None:
         def run() -> None:
-            if drain_lock.acquire(blocking=False):  # A13: single drain loop
+            # A13: one drain loop at a time. A thread that finds the loop
+            # running leaves its wake-up in ``work_pending``; the loop
+            # re-checks it after releasing the lock, so an ingest that lands
+            # after the loop's last (empty) step is still drained.
+            work_pending.set()
+            while work_pending.is_set() and drain_lock.acquire(blocking=False):
                 try:
+                    work_pending.clear()
                     pipeline.drain_all()
                 finally:
                     drain_lock.release()
 
-        threading.Thread(target=run, daemon=True).start()
+        threading.Thread(target=run, name="drain", daemon=True).start()
 
     class Handler(BaseHTTPRequestHandler):
         def _reply(self, code: int, payload: dict) -> None:
