@@ -989,6 +989,10 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     A peel over a DATA-sized adjacency must keep the aggregate +
     semi-join rounds (see the CC entry) — this fold is valid only
     because TOP_EDGES bounds the domain."""
+    # Spark's sequence() counts down when start > stop: KCORE_ROUNDS = 0
+    # would run the peel over [1, 0], two rounds instead of none.
+    if KCORE_ROUNDS < 1:
+        raise ValueError("KCORE_ROUNDS must be >= 1: the peel fold iterates sequence(1, KCORE_ROUNDS)")
     tune(spark)
     adj = _brand_adj(_brand_edges(spark, sf_dir))
     one = adj.agg(F.collect_list(F.struct("src", "dst")).alias("a0"))

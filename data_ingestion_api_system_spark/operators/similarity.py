@@ -1849,8 +1849,7 @@ MMR_K = 5  # diversified picks
 # The selection fold iterates F.sequence(2, MMR_K): Spark's sequence()
 # auto-steps -1 when start > stop, so MMR_K = 1 would silently produce a
 # DESCENDING [2, 1] and two bogus picks where the old unrolled loop
-# produced none (ADVICE r14). Guard the constant, not the call site.
-assert MMR_K >= 2, "MMR_K must be >= 2: the selection fold iterates sequence(2, MMR_K)"
+# produced none. q_sim_mmr_diversify checks it before it plans.
 _MMR_LAM_REL = 7  # λ=0.7 (×10)
 _MMR_LAM_DIV = 3  # 1−λ (×10)
 
@@ -1887,6 +1886,8 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_max`` over (mmr_score, −vec_id) structs. No driver-side
     collect either way. Ties break on vec_id everywhere, so the pick
     sequence is unique."""
+    if MMR_K < 2:
+        raise ValueError("MMR_K must be >= 2: the selection fold iterates sequence(2, MMR_K)")
     tune(spark)
     e = _emb(spark, sf_dir)
     q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))

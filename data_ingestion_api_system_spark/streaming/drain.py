@@ -12,14 +12,17 @@ Design (SURVEY §3.4, §4.3):
   under retries (the exactly-once concern Delta MERGE would otherwise
   cover; the reference gets this for free by being single-threaded).
 - **The queue is a query.** There is no queue data structure: pending =
-  ``batches ⟕ latest-log WHERE status='yet_to_start' ORDER BY
-  priority_level DESC, created_at ASC, request_seq ASC, batch_seq ASC
-  LIMIT 1`` evaluated per trigger — identical preemption semantics to the
-  reference's sort-on-insert queue (test/test_api.js:216-267: HIGH
-  submitted later overtakes queued LOW), and on Spark it executes as
-  TakeOrderedAndProject (per-partition heap + driver merge, no global
-  sort). Each step still scans ``batches`` and the whole log, so its cost
-  grows with the state tables; that curve has not been measured.
+  ``batches ⟕anti batch_log ON batch_id ORDER BY priority_level DESC,
+  created_at ASC, request_seq ASC, batch_seq ASC`` evaluated per trigger —
+  identical preemption semantics to the reference's sort-on-insert queue
+  (test/test_api.js:216-267: HIGH submitted later overtakes queued LOW).
+  The anti-join is exact because only ``triggered`` and ``completed`` are
+  ever logged (:meth:`IngestionPipeline._log` refuses anything else), so a
+  batch with any log row is no longer ``yet_to_start``; replayed
+  duplicates and compaction keep that true. On Spark it executes as a
+  broadcast ``LeftAnti`` join feeding TakeOrderedAndProject (per-partition
+  heap + driver merge, no shuffle, no global sort). Each step still scans
+  ``batches`` and the whole log, so its cost grows with the state tables.
 - **Writes go through Arrow.** Every rows → DataFrame conversion is
   :meth:`IngestionPipeline._frame`: the rows become a ``pyarrow.Table``,
   which Spark plans as a driver-side ``LocalTableScan``. Built from a list
@@ -146,16 +149,24 @@ class IngestionPipeline:
         surviving restarts; each append is one Spark write job with its
         commit (≈0.13–0.15 s on 4 vCPUs). ``durable=False``: state rows live
         in driver memory and materialize as DataFrames on read — identical
-        query semantics (every rollup/join/top-1 still runs through Spark)
-        and no state on disk; used by the fast test suite (durable-mode
-        tests keep the parquet path covered)."""
+        query semantics and no state on disk; used by the fast test suite
+        (durable-mode tests keep the parquet path covered).
+
+        Every join and top-k runs through Spark in both modes. The one
+        driver-side step is :meth:`status`'s last-write-wins pick per batch
+        over the few joined rows of a single ingestion.
+
+        Reopening a durable state dir resumes ``request_seq`` and
+        ``log_seq`` after the largest stored value (see :meth:`_take`), so
+        both stay global orders across restarts."""
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DrainConfig()
         self.clock = clock or (lambda: datetime.now(timezone.utc))
         self.durable = durable
-        self._request_seq = 0
-        self._log_seq = 0
+        self._seq: dict[str, int | None] = dict.fromkeys(
+            ("request_seq", "log_seq"), None if durable else 0
+        )
         self._mem: dict[str, list] = {}
         # Run-to-completion lock: the reference executes every route handler
         # and drain cycle on one Node event loop, so no two operations ever
@@ -201,6 +212,20 @@ class IngestionPipeline:
             return self._frame([], schema)
         return self.spark.read.schema(schema).parquet(path)
 
+    def _take(self, column: str, name: str, schema: T.StructType) -> int:
+        """The next ``request_seq`` or ``log_seq``. A durable pipeline
+        starts each counter, on first use, one past the largest value stored
+        in table ``name``: one aggregate, and no Spark job while the table
+        does not exist."""
+        n = self._seq[column]
+        if n is None:
+            top = None
+            if os.path.exists(self._path(name)):
+                top = self._read(name, schema).agg(F.max(column)).head()[0]
+            n = 0 if top is None else top + 1
+        self._seq[column] = n + 1
+        return n
+
     def _append(self, name: str, rows: list, schema: T.StructType) -> None:
         if not self.durable:
             self._mem.setdefault(name, []).extend(rows)
@@ -229,8 +254,7 @@ class IngestionPipeline:
             raise InvalidRequest("Invalid input")
         ingestion_id = str(uuid.uuid4())
         created_at = self.clock()
-        seq = self._request_seq
-        self._request_seq += 1
+        seq = self._take("request_seq", "ingestions", _INGESTIONS_SCHEMA)
         batch_rows = [
             Row(
                 batch_id=str(uuid.uuid4()),
@@ -259,25 +283,6 @@ class IngestionPipeline:
             self._append("batches", batch_rows, _BATCHES_SCHEMA)
         return ingestion_id
 
-    # -- status overlay ------------------------------------------------------
-
-    def _batches_with_status(self) -> DataFrame:
-        """batches ⟕ latest batch_log entry, default yet_to_start (the A15
-        coalesce). The log dedup is a per-key max — at scale a compacted
-        state table; here a window-free groupBy."""
-        batches = self._read("batches", _BATCHES_SCHEMA)
-        log = self._read("batch_log", _BATCH_LOG_SCHEMA)
-        latest = (
-            log.groupBy("batch_id")
-            .agg(F.max(F.struct("log_seq", "status")).alias("m"))
-            .select("batch_id", F.col("m.status").alias("log_status"))
-        )
-        return (
-            batches.join(latest, "batch_id", "left")
-            .withColumn("status", F.coalesce("log_status", F.lit(STATUS_YET_TO_START)))
-            .drop("log_status")
-        )
-
     # -- A14-A17: status -----------------------------------------------------
 
     def status(self, ingestion_id: str) -> dict:
@@ -287,20 +292,29 @@ class IngestionPipeline:
             return self._status_locked(ingestion_id)
 
     def _status_locked(self, ingestion_id: str) -> dict:
-        ing = (
+        joined = (
+            self._read("batches", _BATCHES_SCHEMA)
+            .filter(F.col("ingestion_id") == ingestion_id)
+            .join(self._read("batch_log", _BATCH_LOG_SCHEMA), "batch_id", "left")
+            .select("batch_id", "batch_seq", "ids", "status", "log_seq")
+            .fillna(STATUS_YET_TO_START, subset=["status"])
+            .collect()
+        )
+        if not joined and not (
             self._read("ingestions", _INGESTIONS_SCHEMA)
             .filter(F.col("ingestion_id") == ingestion_id)
             .head(1)
-        )
-        if not ing:
+        ):
             raise NotFound(ingestion_id)
-        rows = (
-            self._batches_with_status()
-            .filter(F.col("ingestion_id") == ingestion_id)
-            .orderBy("batch_seq")
-            .select("batch_id", "ids", "status")
-            .collect()
-        )
+        # Last write wins per batch: the highest (log_seq, status), the
+        # struct-max that compact_log folds with. An unlogged batch has
+        # one row.
+        latest: dict[str, Row] = {}
+        for r in joined:
+            kept = latest.get(r.batch_id)
+            if kept is None or (r.log_seq, r.status) > (kept.log_seq, kept.status):
+                latest[r.batch_id] = r
+        rows = sorted(latest.values(), key=lambda r: r.batch_seq)
         statuses = [r.status for r in rows]
         if all(s == STATUS_COMPLETED for s in statuses):  # vacuously true if empty
             overall = STATUS_COMPLETED
@@ -319,42 +333,36 @@ class IngestionPipeline:
 
     # -- A6-A13: drain -------------------------------------------------------
 
-    def _next_pending(self) -> Row | None:
-        """A6+A7: top-1 of the pending set under (priority DESC, created_at
-        ASC, request_seq ASC, batch_seq ASC) — TakeOrderedAndProject, not a
-        global sort."""
-        rows = (
-            self._batches_with_status()
-            .filter(F.col("status") == STATUS_YET_TO_START)
-            .withColumn("priority_level", priority_level("priority"))
-            .orderBy(
-                F.desc("priority_level"),
-                F.asc("created_at"),
-                F.asc("request_seq"),
-                F.asc("batch_seq"),
-            )
-            .head(1)
-        )
-        return rows[0] if rows else None
+    def _next_pending(self) -> list[Row]:
+        """A7: the first two pending batches — TakeOrderedAndProject, not a
+        global sort. The second only tells :meth:`drain_all` whether another
+        step has work, at no extra job."""
+        return self.queue_snapshot().head(2)
 
     def _log(self, batch_id: str, status: str) -> None:
+        if status not in (STATUS_TRIGGERED, STATUS_COMPLETED):
+            # queue_snapshot reads "has a log row" as "not yet_to_start"
+            raise ValueError(f"cannot log status {status!r}")
+        seq = self._take("log_seq", "batch_log", _BATCH_LOG_SCHEMA)
         self._append(
             "batch_log",
-            [Row(batch_id=batch_id, status=status, log_seq=self._log_seq)],
+            [Row(batch_id=batch_id, status=status, log_seq=seq)],
             _BATCH_LOG_SCHEMA,
         )
-        self._log_seq += 1
 
     def drain_step(self) -> str | None:
         """One drain cycle (one loop body of src/app.js:65-96). Returns the
         processed batch_id, or None if the queue was empty."""
         with self._op_lock:
-            return self._drain_step_locked()
+            return self._drain_step_locked()[0]
 
-    def _drain_step_locked(self) -> str | None:
-        batch = self._next_pending()
-        if batch is None:
-            return None
+    def _drain_step_locked(self) -> tuple[str | None, bool]:
+        """(processed batch_id or None, whether the dequeue saw another
+        pending batch)."""
+        head = self._next_pending()
+        if not head:
+            return None, False
+        batch = head[0]
         self._log(batch.batch_id, STATUS_TRIGGERED)  # A9
         results = []
         for id_ in batch.ids:  # A10: strictly sequential per-ID calls
@@ -369,13 +377,20 @@ class IngestionPipeline:
         self._log(batch.batch_id, STATUS_COMPLETED)  # A11
         if self.config.batch_gap:
             time.sleep(self.config.batch_gap)  # A12: gap AFTER work
-        return batch.batch_id
+        return batch.batch_id, len(head) > 1
 
     def drain_all(self, max_steps: int = 10_000) -> int:
         """Drain until empty (the full processBatches loop). Returns the
-        number of batches processed."""
-        n = 0
-        while n < max_steps and self.drain_step() is not None:
+        number of batches processed. The loop ends after the step whose
+        dequeue saw no second pending batch, without an empty step; an
+        ingest that lands after that dequeue waits for the next call (the
+        HTTP shim makes one)."""
+        n, more = 0, True
+        while more and n < max_steps:
+            with self._op_lock:
+                batch_id, more = self._drain_step_locked()
+            if batch_id is None:
+                break
             n += 1
         return n
 
@@ -415,10 +430,11 @@ class IngestionPipeline:
         ``MERGE INTO batch_status USING log ON batch_id WHEN MATCHED AND
         log.log_seq > target.log_seq THEN UPDATE ...`` (last write wins).
 
-        The fold is the same per-key ``max(struct(log_seq, status))`` the
-        read path computes on the fly, so compaction is a pure no-op for
-        query results — and it is idempotent under replayed/duplicate
-        transitions because struct-max is insensitive to duplicates.
+        The fold is the per-key ``max(struct(log_seq, status))`` that
+        :meth:`status` applies on the driver, and it keeps one row for every
+        logged batch, so compaction is a pure no-op for query results — and
+        it is idempotent under replayed/duplicate transitions because
+        struct-max is insensitive to duplicates.
         In-process readers keep working mid-compaction because every
         pipeline operation serializes on ``_op_lock`` — between the two
         directory renames below, ``batch_log`` briefly does not exist, so
@@ -480,8 +496,7 @@ class IngestionPipeline:
             ):
                 shutil.rmtree(self._path(name), ignore_errors=True)
             self._mem.clear()
-            self._request_seq = 0
-            self._log_seq = 0
+            self._seq = dict.fromkeys(self._seq, 0)
 
     # -- always-on streaming drain (SURVEY §3.4) -----------------------------
 
@@ -513,10 +528,13 @@ class IngestionPipeline:
 
     def queue_snapshot(self) -> DataFrame:
         """The pending set in dequeue order (A6) — what the reference's
-        batchQueue array would contain."""
+        batchQueue array would contain: the batches with no log row
+        (``yet_to_start``; see the module docstring) under (priority DESC,
+        created_at ASC, request_seq ASC, batch_seq ASC)."""
         return (
-            self._batches_with_status()
-            .filter(F.col("status") == STATUS_YET_TO_START)
+            self._read("batches", _BATCHES_SCHEMA)
+            .join(self._read("batch_log", _BATCH_LOG_SCHEMA), "batch_id", "left_anti")
+            .withColumn("status", F.lit(STATUS_YET_TO_START))
             .withColumn("priority_level", priority_level("priority"))
             .orderBy(
                 F.desc("priority_level"),

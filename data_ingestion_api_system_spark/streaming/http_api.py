@@ -34,7 +34,7 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
             # A13: one drain loop at a time. A thread that finds the loop
             # running leaves its wake-up in ``work_pending``; the loop
             # re-checks it after releasing the lock, so an ingest that lands
-            # after the loop's last (empty) step is still drained.
+            # after the loop's last dequeue is still drained.
             work_pending.set()
             while work_pending.is_set() and drain_lock.acquire(blocking=False):
                 try:

@@ -1,6 +1,7 @@
 """The drain pipeline's state tables: how rows become DataFrames (Arrow, a
 driver-side ``LocalTableScan``), compatibility with state written by the
-earlier ``createDataFrame(rows)`` writer, and failure on unreadable state."""
+earlier ``createDataFrame(rows)`` writer, failure on unreadable state, a
+crash between a step's appends, and sequence counters across a reopen."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from pyspark.sql import types as T
 from data_ingestion_api_system_spark.streaming.drain import (
     _BATCH_LOG_SCHEMA,
     _BATCHES_SCHEMA,
+    _INGESTIONS_SCHEMA,
     DrainConfig,
     IngestionPipeline,
 )
@@ -197,3 +199,75 @@ def test_corrupt_log_raises_and_reruns_nothing(spark, tmp_path):
         with pytest.raises(Exception, match="(?i)parquet"):
             pipeline.status(ing)
     assert calls == [1, 2, 3]
+
+
+def test_crash_between_log_and_results_reruns_nothing(spark, tmp_path, monkeypatch):
+    """A step that dies after logging ``triggered`` but before its results
+    are appended raises, leaves the batch ``triggered``, and is not re-run
+    by later steps, on the open pipeline or on a reopened one: no external
+    call repeats."""
+    calls: list[int] = []
+
+    def call(id_: int) -> dict:
+        calls.append(id_)
+        return {"id": id_, "data": "processed"}
+
+    state = str(tmp_path / "state")
+    p = IngestionPipeline(spark, state, DrainConfig(external_call=call))
+    ing = p.ingest([1, 2, 3, 4], "HIGH")
+    append = IngestionPipeline._append
+
+    def crash(self, name, rows, schema):
+        if name == "processed":
+            raise OSError("disk full")
+        append(self, name, rows, schema)
+
+    with monkeypatch.context() as m:
+        m.setattr(IngestionPipeline, "_append", crash)
+        with pytest.raises(OSError, match="disk full"):
+            p.drain_step()
+    assert calls == [1, 2, 3]
+    assert [b["status"] for b in p.status(ing)["batches"]] == ["triggered", "yet_to_start"]
+
+    assert p.drain_step() == p.status(ing)["batches"][1]["batch_id"]
+    assert calls == [1, 2, 3, 4]
+    assert p.drain_step() is None and p.drain_all() == 0
+    reopened = IngestionPipeline(spark, state, DrainConfig(external_call=call))
+    assert reopened.drain_step() is None and reopened.drain_all() == 0
+    assert calls == [1, 2, 3, 4]
+    st = reopened.status(ing)
+    assert st["status"] == "triggered"
+    assert [b["status"] for b in st["batches"]] == ["triggered", "completed"]
+    assert sorted(r.id for r in reopened.processed_results().collect()) == [4]
+
+
+def test_reopen_resumes_sequence_counters(spark, tmp_path):
+    """``log_seq`` stays the global trigger order, and ``request_seq``
+    continues, across a reopen of the state dir (``compact_log`` included).
+    On a fresh state dir the counters cost no Spark job: the first ingest
+    runs only its two appends."""
+    state = str(tmp_path / "state")
+    p = IngestionPipeline(spark, state)
+    sc = spark.sparkContext
+    sc.setJobGroup("first-ingest", "first-ingest")
+    try:
+        p.ingest([1, 2, 3, 4], "LOW")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("first-ingest")) == 2
+    triggered = [p.drain_step()]
+    p.ingest([1, 2, 3, 4], "LOW")
+    triggered.append(p.drain_step())
+    p.compact_log()  # keeps each batch's last log_seq
+    for _ in range(2):
+        p = IngestionPipeline(spark, state)
+        p.ingest([5], "HIGH")
+        triggered += [p.drain_step(), p.drain_step()]
+    assert p.drain_step() is None
+
+    log = p._read("batch_log", _BATCH_LOG_SCHEMA).orderBy("log_seq").collect()
+    assert [r.batch_id for r in log if r.status == "triggered"] == triggered[2:]
+    assert [r.batch_id for r in log if r.status == "completed"] == triggered
+    assert len({r.log_seq for r in log}) == len(log)
+    seqs = [r.request_seq for r in p._read("ingestions", _INGESTIONS_SCHEMA).collect()]
+    assert sorted(seqs) == [0, 1, 2, 3]
